@@ -1,26 +1,58 @@
 """Transitive clustering: connected components over match-pair edges.
 
 The reference stops at pair output; the record-linkage pipeline
-(BASELINE.json north_star) additionally needs transitive clustering. This is
-the alternating large-star / small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14) expressed as DataFrame
-self-joins — the standard scalable CC formulation (GraphFrames uses the same
-scheme). Converges in O(log² n) rounds; every round is checkpointed to cut
-lineage so 10^12-edge inputs don't build unbounded DAGs. When the session has
-a checkpoint dir configured (``sc.setCheckpointDir`` — the cluster deployment
-shape) rounds use RELIABLE ``checkpoint()``: under ``localCheckpoint`` an
-executor loss destroys cached blocks and kills the whole job, which at
-cluster scale over a multi-hour CC run is near-certain. Without a checkpoint
-dir (local dev) it falls back to ``localCheckpoint``.
+(BASELINE.json north_star) additionally needs transitive clustering.
+``connected_components`` first checkpoints the cleaned, distinct edge set
+(cutting the upstream lineage once), then picks a path by its size:
+
+* **small graphs** (at most ``LOCAL_EDGES`` edges, integral / string /
+  binary ids): one bounded ``limit(LOCAL_EDGES + 1)`` fetch brings the edges
+  to the driver, where min-label hooking plus pointer jumping labels them in
+  vectorized numpy; the labels ship back as an Arrow LocalTableScan. At this
+  size the per-round fixed cost of the distributed rounds (checkpoint job,
+  signature job, ~4 exchanges of planning and scheduling) dwarfs the work.
+* **large graphs** (or other id types): the alternating large-star /
+  small-star algorithm (Kiveris et al., "Connected Components in MapReduce
+  and Beyond", SoCC'14) expressed as DataFrame self-joins — the standard
+  scalable CC formulation (GraphFrames uses the same scheme). Converges in
+  O(log² n) rounds; every round is checkpointed to cut lineage so
+  10^12-edge inputs don't build unbounded DAGs.
+
+When the session has a checkpoint dir configured (``sc.setCheckpointDir`` —
+the cluster deployment shape) checkpoints are RELIABLE ``checkpoint()``:
+under ``localCheckpoint`` an executor loss destroys cached blocks and kills
+the whole job, which at cluster scale over a multi-hour CC run is
+near-certain. Without a checkpoint dir (local dev) it falls back to
+``localCheckpoint``.
 
 Cluster id = min(node id) per component (deterministic, data-derived — never
-partition-order-dependent).
+partition-order-dependent). Both paths return the same rows.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    IntegralType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+#: Edge count up to which the graph is labelled on the driver. 200k edges
+#: of 16-byte md5 ids (or ~60-byte urls) is a few MB to tens of MB of
+#: driver memory; beyond it the star rounds' per-round cost is amortized.
+LOCAL_EDGES = 200_000
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        return df.checkpoint()
+    return df.localCheckpoint()
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -55,6 +87,67 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.where(F.col("src") != F.col("dst")).distinct()
 
 
+def _min_labels(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Component label (smallest node code) of each of ``n`` nodes, given
+    edge endpoint codes ``u``/``v``.
+
+    Each pass hooks every root onto the smallest root across its edges,
+    then pointer-jumps until every node points at a root. Labels only ever
+    decrease and always name a node of the same component; at the fixpoint
+    every edge joins two nodes with the same root, so the label is constant
+    per component and equals its minimum code. Every root of an unfinished
+    component either hooks or is hooked onto, so the number of roots at
+    least halves per pass: O(log n) passes of O(|E|) numpy work.
+    """
+    label = np.arange(n)
+    while True:
+        lu, lv = label[u], label[v]
+        if np.array_equal(lu, lv):
+            return label
+        np.minimum.at(label, lu, lv)
+        np.minimum.at(label, lv, lu)
+        while True:
+            jumped = label[label]
+            if np.array_equal(jumped, label):
+                break
+            label = jumped
+
+
+def _label_locally(e: DataFrame) -> DataFrame | None:
+    """Label a checkpointed, clean edge set on the driver, or return None
+    when it has more than ``LOCAL_EDGES`` edges or ids whose Python order
+    may differ from Spark's.
+
+    Python orders ints numerically, ``bytes`` as unsigned bytes and ``str``
+    by code point (which is UTF-8 byte order) — exactly Spark's ordering of
+    integral, binary and UTF8_BINARY-collated string columns — so the
+    factorized minimum is the id the star rounds would pick.
+    """
+    dtype = e.schema["src"].dataType
+    if e.schema["dst"].dataType != dtype or not (
+        isinstance(dtype, (IntegralType, BinaryType)) or dtype == StringType()
+    ):
+        return None
+    pdf = e.limit(LOCAL_EDGES + 1).toPandas()
+    n_edges = len(pdf)
+    if n_edges > LOCAL_EDGES:
+        return None
+    if n_edges == 0:
+        # createDataFrame skips Arrow for an empty frame and would build a
+        # Python RDD; the empty checkpoint is a JVM-only scan
+        return e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+    codes, nodes = pd.factorize(
+        np.concatenate([pdf["src"].to_numpy(), pdf["dst"].to_numpy()]), sort=True
+    )
+    label = _min_labels(codes[:n_edges], codes[n_edges:], len(nodes))
+    schema = StructType(
+        [StructField("node", dtype), StructField("component", dtype)]
+    )
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"node": nodes, "component": nodes[label]}), schema
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src_col: str = "src",
@@ -65,16 +158,18 @@ def connected_components(
 
     ``component`` is the minimum node id of the component. Isolated nodes
     (absent from edges) are the caller's to add — they are their own cluster.
+    ``max_iterations`` caps the star rounds; the driver-side labelling of a
+    small graph always runs to convergence.
     """
-    spark = edges.sparkSession
-    reliable = spark.sparkContext.getCheckpointDir() is not None
-    ckpt = (lambda df: df.checkpoint()) if reliable else (lambda df: df.localCheckpoint())
-    e = ckpt(
+    e = _checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
+    local = _label_locally(e)
+    if local is not None:
+        return local
     # lazy: derived from the CHECKPOINTED initial edge set, so the plan stays
     # valid after ``e`` is rebound below; only consumed once by the final
     # roots anti-join — materializing it eagerly was one extra driver
@@ -96,21 +191,8 @@ def connected_components(
         return (row["n"], row["h"])
 
     sig = _signature(e)
-    # Small-graph batching: below this edge count the per-round fixed cost
-    # (checkpoint job + signature job + ~4 exchanges of driver latency)
-    # dominates the actual star work, so two star rounds are folded into
-    # one checkpoint+signature. The converged edge set is a fixpoint of
-    # SS∘LS, so extra folded rounds past convergence are identity — the
-    # result is unchanged, only the detection granularity coarsens. The
-    # current edge count is already known from the signature, so the
-    # decision costs nothing; production-scale graphs stay at one round
-    # per checkpoint (lineage depth and memory between checkpoints).
-    small_edges = 200_000
     for _ in range(max_iterations):
-        step = _small_star(_large_star(e))
-        if sig[0] is not None and sig[0] < small_edges:
-            step = _small_star(_large_star(step))
-        e2 = ckpt(step)
+        e2 = _checkpoint(_small_star(_large_star(e)))
         sig2 = _signature(e2)
         e = e2
         if sig2 == sig:
@@ -159,7 +241,9 @@ def update_components(
     a = assignments.select(
         F.col(node_col).alias("_n"), F.col(comp_col).alias("_c")
     )
-    e = (
+    # checkpointed once: the delta plan (typically a join + verify) feeds
+    # both the contracted graph and the fresh-node set below
+    e = _checkpoint(
         new_edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .where(F.col("src") != F.col("dst"))

@@ -11,7 +11,9 @@ Stages
   02_blocking  self-join candidate pairs via the prefix/size/position plan
                (set_sim_join kernel with l<r dedup)  → (l_url, r_url)
   03_scoring   vectorized verify (jaccard by default) → (l_url, r_url, score)
-  04_clusters  connected components over match edges → (url, cluster_id)
+  04_clusters  connected components over match edges → (url, cluster_id);
+               small match graphs are labelled on the driver after one
+               bounded fetch, large ones by distributed star rounds
 
 Manifests record row counts, per-stage partition counts and per-partition row
 lineage, wall-clock, and candidate-pairs/sec for the scoring stage — the
@@ -231,7 +233,7 @@ class LinkagePipeline:
             return st.manifest()
         docs = st_ext.read(self.spark)
         cand = st_block.read(self.spark)
-        n_cand = cand.count()
+        n_cand = st_block.manifest()["n_rows"]
         t0 = time.time()
         from ..operators.matcher import verify_pairs
 
@@ -386,6 +388,7 @@ class LinkagePipeline:
         for st, nxt, m in staged:
             shutil.rmtree(st.dir)
             os.rename(nxt.dir, st.dir)
+            m["path"] = st.dir
             with open(st.manifest_path, "w") as f:
                 json.dump(m, f, indent=2)
             os.remove(nxt.manifest_path)

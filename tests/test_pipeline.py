@@ -39,6 +39,9 @@ def test_pipeline_end_to_end_f1(spark, pages, tmp_path_factory):
     assert f1 >= 0.99, f"pairwise F1 {f1} < 0.99"
     m = pipe.metrics()
     assert m["03_scoring"]["candidate_pairs_per_sec"] > 0
+    # the candidate count comes from the blocking manifest, not a recount
+    n_cand = spark.read.parquet(os.path.join(wd, "02_blocking")).count()
+    assert m["03_scoring"]["candidates_scored"] == n_cand
     assert m["02_blocking"]["n_rows"] >= m["03_scoring"]["n_rows"]
 
 

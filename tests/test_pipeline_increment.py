@@ -1,5 +1,7 @@
 """Incremental pipeline: increment(delta) ≡ full run over (base ∪ delta)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,7 +37,13 @@ def test_increment_equals_full_run(spark, corpus, tmp_path_factory):
     )
     assert got == want
     # and the manifest records the increment epoch
-    assert pipe.metrics()["04_clusters"]["increment"] == 1
+    m = pipe.metrics()
+    assert m["04_clusters"]["increment"] == 1
+    # the rewritten manifests name the renamed stage dirs, not the
+    # deleted ``__next`` ones
+    for name in ("01_extract", "04_clusters"):
+        assert m[name]["path"] == os.path.join(wd_inc, name)
+        assert os.path.isdir(m[name]["path"])
 
 
 def test_second_increment_and_recrawl_dedup(spark, corpus, tmp_path_factory):

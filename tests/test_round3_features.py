@@ -173,11 +173,14 @@ def test_bucketed_parquet_write_creates_bucket_dirs(spark, tmp_path):
     assert set(back.columns) >= {"url", "text", "lang", "_bucket"}
 
 
-def test_connected_components_with_reliable_checkpoint(spark, tmp_path):
-    from py_stringsimjoin_spark.operators.connected_components import (
-        connected_components,
-    )
+@pytest.mark.parametrize("path", ["local", "star"])
+def test_connected_components_with_reliable_checkpoint(
+    spark, tmp_path, monkeypatch, path
+):
+    from py_stringsimjoin_spark.operators import connected_components as cc
 
+    if path == "star":
+        monkeypatch.setattr(cc, "LOCAL_EDGES", -1)
     ckdir = str(tmp_path / "ck")
     old = spark.sparkContext.getCheckpointDir()
     spark.sparkContext.setCheckpointDir(ckdir)
@@ -185,7 +188,7 @@ def test_connected_components_with_reliable_checkpoint(spark, tmp_path):
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (10, 11), (30, 31)], "src long, dst long"
         )
-        out = {(r["node"], r["component"]) for r in connected_components(edges).collect()}
+        out = {(r["node"], r["component"]) for r in cc.connected_components(edges).collect()}
         assert out == {
             (1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (30, 30), (31, 30),
         }
